@@ -1,6 +1,7 @@
 package graft.crawl
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
@@ -17,6 +18,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  */
 object Snapshots {
 
+  /** The config fields that, with a row's coordinates, determine its URL
+    * (the frontier stores coordinates, not URLs): each manifest records
+    * them and [[resume]] refuses a config that differs. */
+  private def grammarFields(cfg: Crawl.Config): Seq[(String, Any)] = Seq(
+    "scale" -> cfg.scale, "limit_per_site" -> cfg.limitPerSite, "rev" -> cfg.rev,
+    "num_salts" -> cfg.numSalts, "probe_pagination" -> cfg.probePagination)
+
   def write(spark: SparkSession, dir: String, wave: Int,
       tables: Map[String, DataFrame], cfg: Crawl.Config,
       failures: Map[String, String] = Map.empty): Unit = {
@@ -28,11 +36,9 @@ object Snapshots {
     // break the manifest on the first embedded quote)
     val node = graft.sinks.SiteJson.mapper.createObjectNode()
     node.put("wave", wave)
-    node.put("scale", cfg.scale)
-    node.put("limit_per_site", cfg.limitPerSite)
-    node.put("rev", cfg.rev)
-    node.put("num_salts", cfg.numSalts)
-    node.put("probe_pagination", cfg.probePagination)
+    grammarFields(cfg).foreach { case (k, v) =>
+      node.set[JsonNode](k, graft.sinks.SiteJson.mapper.valueToTree[JsonNode](v))
+    }
     val counts = node.putObject("row_counts")
     tables.foreach { case (n, df) => counts.put(n, df.count()) }
     // mid-crawl retry-exhausted sites: their state rows are already
@@ -120,22 +126,29 @@ object Snapshots {
    * wave v+1 with the persisted frontier/seen/posts state. Idempotent by
    * construction: the seen-set makes re-fetching a no-op and the schedule
    * is a pure function of the frontier.
+   *
+   * A config whose [[grammarFields]] differ from the manifest's would
+   * rebuild different URLs from the stored coordinates, so it is refused,
+   * naming the first differing field.
    */
   def resume(spark: SparkSession, dir: String, cfg: Crawl.Config): Crawl.Result = {
     val v = currentVersion(dir).getOrElse(
       throw new IllegalStateException(s"no CURRENT snapshot under $dir"))
     val manifest = Paths.get(dir, "snapshots", s"v$v", "manifest.json")
+    val node = graft.sinks.SiteJson.mapper.readTree(Files.readString(manifest))
+    grammarFields(cfg).foreach { case (field, want) =>
+      val have = Option(node.get(field)).map(_.asText).orNull
+      if (have != want.toString)
+        throw new IllegalArgumentException(s"snapshot v$v under $dir was written " +
+          s"with $field=$have; the resume config has $field=$want")
+    }
     val failures0: Map[String, Throwable] =
-      if (!Files.exists(manifest)) Map.empty
-      else {
-        val node = graft.sinks.SiteJson.mapper.readTree(Files.readString(manifest))
-        Option(node.get("failed_sites")).toSeq.flatMap { f =>
-          val it = f.fields()
-          Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-            .map(e => e.getKey -> (new RuntimeException(e.getValue.asText()): Throwable))
-            .toSeq
-        }.toMap
-      }
+      Option(node.get("failed_sites")).toSeq.flatMap { f =>
+        val it = f.fields()
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+          .map(e => e.getKey -> (new RuntimeException(e.getValue.asText()): Throwable))
+          .toSeq
+      }.toMap
     Crawl.runFrom(spark, cfg,
       frontier0 = readTable(spark, dir, v, "frontier"),
       wave0 = v + 1,

@@ -1,12 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType, IntegerType,
+  LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -991,77 +991,103 @@ object GraftFunctions {
 
   private val K = Kernels.getClass
 
-  private def invoke1(name: String, c: Column): Column = ColumnBridge.column(
-    StaticInvoke(K, StringType, name, Seq(ColumnBridge.expression(c)),
-      inputTypes = Seq(StringType)))
+  /** A static call of `method` on [[Kernels]] with its signature: one
+    * definition builds both the SQL expression and the typed Column. */
+  private final case class Kernel(method: String, returns: DataType, inputs: DataType*) {
+    def expr(args: Seq[Expression]): Expression =
+      StaticInvoke(K, returns, method, args.take(inputs.size), inputTypes = inputs)
+    def apply(args: Column*): Column =
+      ColumnBridge.column(expr(args.map(ColumnBridge.expression)))
+  }
 
-  private def invoke2(name: String, a: Column, b: Column): Column = ColumnBridge.column(
-    StaticInvoke(K, StringType, name,
-      Seq(ColumnBridge.expression(a), ColumnBridge.expression(b)),
-      inputTypes = Seq(StringType, StringType)))
+  private val S = StringType
+  private val I = IntegerType
+  private val arrS = ArrayType(StringType, containsNull = false)
+  private val arrL = ArrayType(LongType, containsNull = false)
+  private val arrD = ArrayType(DoubleType)
+  private val arrArrD = ArrayType(arrD)
+  private val arrArrArrD = ArrayType(arrArrD)
+  private val arrI = ArrayType(IntegerType)
 
-  def url_canonicalize(c: Column): Column = invoke1("urlCanonicalize", c)
-  def url_host(c: Column): Column = invoke1("urlHost", c)
-  def url_path(c: Column): Column = invoke1("urlPath", c)
-  def url_resolve(base: Column, ref: Column): Column = invoke2("urlResolve", base, ref)
-  def url_query_param(c: Column, key: Column): Column = invoke2("urlQueryParam", c, key)
+  /** The kernels exposed to SQL, by SQL name. */
+  private val sqlKernels: Seq[(String, Kernel)] = Seq(
+    "url_canonicalize" -> Kernel("urlCanonicalize", S, S),
+    "url_host" -> Kernel("urlHost", S, S),
+    "url_path" -> Kernel("urlPath", S, S),
+    "url_resolve" -> Kernel("urlResolve", S, S, S),
+    "url_query_param" -> Kernel("urlQueryParam", S, S, S),
+    "graft_slugify" -> Kernel("slugify", S, S),
+    "strip_parens" -> Kernel("stripParens", S, S),
+    "normalize_ws" -> Kernel("normalizeWs", S, S),
+    "normalize_text" -> Kernel("normalizeText", S, S),
+    "normalize_dashes" -> Kernel("normalizeDashes", S, S),
+    "ics_escape" -> Kernel("icsEscape", S, S),
+    "ics_fold" -> Kernel("icsFold", S, S),
+    "mime_guess" -> Kernel("mimeGuess", S, S),
+    "desc_fallback" -> Kernel("descFallback", S, S),
+    "lz_decompress_utf16" -> Kernel("lzDecompressUtf16", S, S),
+    "lz_compress_utf16" -> Kernel("lzCompressUtf16", S, S),
+    "lexical_to_html" -> Kernel("lexicalToHtml", S, S),
+    "html_text" -> Kernel("htmlText", S, S, S),
+    "simhash64" -> Kernel("simhash64", LongType, S),
+    "shingle_hash64" -> Kernel("shingleHash64", arrL, S, I),
+    "word_ngrams" -> Kernel("wordNgrams", arrS, S, I),
+    "chunk_text" -> Kernel("chunkText", arrS, S, I),
+    "chunk_text_stride" -> Kernel("chunkTextStride", arrS, S, I, I),
+    "md5_minhash_bands" -> Kernel("md5MinhashBands", arrS, S, I, I, I),
+    "winnow_fps" -> Kernel("winnowFps", arrS, S, I, I),
+    "minhash_bands" -> Kernel("minhashBands", arrL, ArrayType(LongType), I, I),
+    "hyperplane_sigs" -> Kernel("hyperplaneSigs", arrL, arrD, I, I),
+    "cosine_sim" -> Kernel("cosineSim", DoubleType, arrD, arrD))
+
+  private val sqlKernel: Map[String, Kernel] = sqlKernels.toMap
+
+  /** Every graft SQL function as (name, expression builder): the one table
+    * both [[registerAll]] and `graft.GraftExtensions` register. */
+  val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] =
+    sqlKernels.map { case (name, k) => name -> (k.expr _) } :+
+      ("cuckoo_might_contain" -> ((args: Seq[Expression]) => CuckooMightContain(args(0), args(1))))
+
+  def url_canonicalize(c: Column): Column = sqlKernel("url_canonicalize")(c)
+  def url_host(c: Column): Column = sqlKernel("url_host")(c)
+  def url_path(c: Column): Column = sqlKernel("url_path")(c)
+  def url_resolve(base: Column, ref: Column): Column = sqlKernel("url_resolve")(base, ref)
+  def url_query_param(c: Column, key: Column): Column = sqlKernel("url_query_param")(c, key)
   /** 64-bit identity of a URL in the seen-set: xxhash64 of the canonical form. */
   def url_hash(c: Column): Column = xxhash64(url_canonicalize(c))
 
-  def slugify(c: Column): Column = invoke1("slugify", c)
-  def strip_parens(c: Column): Column = invoke1("stripParens", c)
-  def normalize_ws(c: Column): Column = invoke1("normalizeWs", c)
+  def slugify(c: Column): Column = sqlKernel("graft_slugify")(c)
+  def strip_parens(c: Column): Column = sqlKernel("strip_parens")(c)
+  def normalize_ws(c: Column): Column = sqlKernel("normalize_ws")(c)
   /** NFC + ROOT-locale lowercase + whitespace collapse + trim (dedup keying). */
-  def normalize_text(c: Column): Column = invoke1("normalizeText", c)
-  def normalize_dashes(c: Column): Column = invoke1("normalizeDashes", c)
-  def ics_escape(c: Column): Column = invoke1("icsEscape", c)
-  def ics_fold(c: Column): Column = invoke1("icsFold", c)
-  def mime_guess(c: Column): Column = invoke1("mimeGuess", c)
-  def desc_fallback(c: Column): Column = invoke1("descFallback", c)
-  def lz_decompress_utf16(c: Column): Column = invoke1("lzDecompressUtf16", c)
-  def lz_compress_utf16(c: Column): Column = invoke1("lzCompressUtf16", c)
-  def lexical_to_html(c: Column): Column = invoke1("lexicalToHtml", c)
-  def html_text(html: Column, selector: Column): Column = invoke2("htmlText", html, selector)
-  def html_attr(html: Column, selector: Column, attr: Column): Column = ColumnBridge.column(
-    StaticInvoke(K, StringType, "htmlAttr",
-      Seq(ColumnBridge.expression(html), ColumnBridge.expression(selector),
-        ColumnBridge.expression(attr)),
-      inputTypes = Seq(StringType, StringType, StringType)))
+  def normalize_text(c: Column): Column = sqlKernel("normalize_text")(c)
+  def normalize_dashes(c: Column): Column = sqlKernel("normalize_dashes")(c)
+  def ics_escape(c: Column): Column = sqlKernel("ics_escape")(c)
+  def ics_fold(c: Column): Column = sqlKernel("ics_fold")(c)
+  def mime_guess(c: Column): Column = sqlKernel("mime_guess")(c)
+  def desc_fallback(c: Column): Column = sqlKernel("desc_fallback")(c)
+  def lz_decompress_utf16(c: Column): Column = sqlKernel("lz_decompress_utf16")(c)
+  def lz_compress_utf16(c: Column): Column = sqlKernel("lz_compress_utf16")(c)
+  def lexical_to_html(c: Column): Column = sqlKernel("lexical_to_html")(c)
+  def html_text(html: Column, selector: Column): Column = sqlKernel("html_text")(html, selector)
+  def html_attr(html: Column, selector: Column, attr: Column): Column =
+    Kernel("htmlAttr", S, S, S, S)(html, selector, attr)
   /** 64-bit SimHash of a text column (token-level, FNV-1a votes). */
-  def simhash64(c: Column): Column = ColumnBridge.column(
-    StaticInvoke(K, org.apache.spark.sql.types.LongType, "simhash64",
-      Seq(ColumnBridge.expression(c)), inputTypes = Seq(StringType)))
+  def simhash64(c: Column): Column = sqlKernel("simhash64")(c)
 
   /** Distinct word-n-gram shingle hashes of a text column (array<bigint>,
     * value-identical to hashing the shingle strings) — codegen'd kernel. */
-  def shingle_hash64(text: Column, n: Int): Column =
-    ColumnBridge.column(StaticInvoke(K,
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.LongType, containsNull = false),
-      "shingleHash64",
-      Seq(ColumnBridge.expression(text), ColumnBridge.expression(lit(n))),
-      inputTypes = Seq(StringType, org.apache.spark.sql.types.IntegerType)))
+  def shingle_hash64(text: Column, n: Int): Column = sqlKernel("shingle_hash64")(text, lit(n))
 
   /** Adjacent word n-grams of a text column as strings (array<string>,
     * all occurrences in document order) — linear-pass codegen'd kernel. */
-  def word_ngrams(text: Column, n: Int): Column =
-    ColumnBridge.column(StaticInvoke(K,
-      org.apache.spark.sql.types.ArrayType(StringType, containsNull = false),
-      "wordNgrams",
-      Seq(ColumnBridge.expression(text), ColumnBridge.expression(lit(n))),
-      inputTypes = Seq(StringType, org.apache.spark.sql.types.IntegerType)))
+  def word_ngrams(text: Column, n: Int): Column = sqlKernel("word_ngrams")(text, lit(n))
 
   /** One-pass per-document repetition stats `[n_tokens, n_distinct, top_c,
     * n_bigrams, n_distinct_bi]` (array<bigint>) — codegen'd kernel,
     * value-identical to the exploded tokens / word_ngrams(2) aggregations
     * (see Kernels.repetitionStats; parity spec in SpanDedupPiiSpec). */
-  def repetition_stats(text: Column): Column =
-    ColumnBridge.column(StaticInvoke(K,
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.LongType, containsNull = false),
-      "repetitionStats",
-      Seq(ColumnBridge.expression(text)),
-      inputTypes = Seq(StringType)))
+  def repetition_stats(text: Column): Column = Kernel("repetitionStats", arrL, S)(text)
 
   /** One-pass quality-envelope gate (boolean) — value-identical to the
     * qualityFeatures-struct predicate (see Kernels.qualityGate; parity
@@ -1069,279 +1095,92 @@ object GraftFunctions {
   def quality_gate(text: Column, minTokens: Int, maxTokens: Int,
       maxPunctRatio: Double, minStopwordRatio: Double,
       minMeanWordLen: Double, maxMeanWordLen: Double): Column =
-    ColumnBridge.column(StaticInvoke(K,
-      org.apache.spark.sql.types.BooleanType, "qualityGate",
-      Seq(ColumnBridge.expression(text),
-        ColumnBridge.expression(lit(minTokens)), ColumnBridge.expression(lit(maxTokens)),
-        ColumnBridge.expression(lit(maxPunctRatio)), ColumnBridge.expression(lit(minStopwordRatio)),
-        ColumnBridge.expression(lit(minMeanWordLen)), ColumnBridge.expression(lit(maxMeanWordLen))),
-      inputTypes = Seq(StringType,
-        org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.IntegerType,
-        org.apache.spark.sql.types.DoubleType, org.apache.spark.sql.types.DoubleType,
-        org.apache.spark.sql.types.DoubleType, org.apache.spark.sql.types.DoubleType)))
+    Kernel("qualityGate", BooleanType, S, I, I, DoubleType, DoubleType, DoubleType, DoubleType)(
+      text, lit(minTokens), lit(maxTokens), lit(maxPunctRatio), lit(minStopwordRatio),
+      lit(minMeanWordLen), lit(maxMeanWordLen))
 
   /** Sliding-window chunk strings with stride (array<string>) —
     * linear-pass codegen'd kernel for overlapping context windows. */
   def chunk_text_stride(text: Column, size: Int, stride: Int): Column =
-    ColumnBridge.column(StaticInvoke(K,
-      org.apache.spark.sql.types.ArrayType(StringType, containsNull = false),
-      "chunkTextStride",
-      Seq(ColumnBridge.expression(text), ColumnBridge.expression(lit(size)),
-        ColumnBridge.expression(lit(stride))),
-      inputTypes = Seq(StringType, org.apache.spark.sql.types.IntegerType,
-        org.apache.spark.sql.types.IntegerType)))
+    sqlKernel("chunk_text_stride")(text, lit(size), lit(stride))
 
   /** Portable md5-MinHash band keys of a text column (array<string>,
     * one key per band) — linear-pass codegen'd kernel, value-identical to
     * the substring(md5(shingle)) column chain (and to its DuckDB replay). */
   def md5_minhash_bands(text: Column, n: Int, perms: Int, bands: Int): Column =
-    ColumnBridge.column(StaticInvoke(K,
-      org.apache.spark.sql.types.ArrayType(StringType, containsNull = false),
-      "md5MinhashBands",
-      Seq(ColumnBridge.expression(text), ColumnBridge.expression(lit(n)),
-        ColumnBridge.expression(lit(perms)), ColumnBridge.expression(lit(bands))),
-      inputTypes = Seq(StringType, org.apache.spark.sql.types.IntegerType,
-        org.apache.spark.sql.types.IntegerType,
-        org.apache.spark.sql.types.IntegerType)))
+    sqlKernel("md5_minhash_bands")(text, lit(n), lit(perms), lit(bands))
 
   /** Winnowing fingerprints of a text column (array<string> of 15-hex-char
     * md5-prefix window minima) — linear-pass codegen'd kernel. */
   def winnow_fps(text: Column, k: Int, w: Int): Column =
-    ColumnBridge.column(StaticInvoke(K,
-      org.apache.spark.sql.types.ArrayType(StringType, containsNull = false),
-      "winnowFps",
-      Seq(ColumnBridge.expression(text), ColumnBridge.expression(lit(k)),
-        ColumnBridge.expression(lit(w))),
-      inputTypes = Seq(StringType, org.apache.spark.sql.types.IntegerType,
-        org.apache.spark.sql.types.IntegerType)))
+    sqlKernel("winnow_fps")(text, lit(k), lit(w))
 
   /** Fixed-token-count chunk strings of a text column (array<string>) —
     * linear-pass codegen'd kernel for the span-grain chunker. */
   def chunk_text(text: Column, chunkSize: Int): Column =
-    ColumnBridge.column(StaticInvoke(K,
-      org.apache.spark.sql.types.ArrayType(StringType, containsNull = false),
-      "chunkText",
-      Seq(ColumnBridge.expression(text), ColumnBridge.expression(lit(chunkSize))),
-      inputTypes = Seq(StringType, org.apache.spark.sql.types.IntegerType)))
+    sqlKernel("chunk_text")(text, lit(chunkSize))
 
   /** Adjacent "l r" symbol-pair strings of an array<string> column —
     * codegen'd kernel for BPE pair statistics. */
-  def bpe_pairs(syms: Column): Column =
-    ColumnBridge.column(StaticInvoke(K,
-      org.apache.spark.sql.types.ArrayType(StringType, containsNull = false),
-      "bpePairs", Seq(ColumnBridge.expression(syms)),
-      inputTypes = Seq(org.apache.spark.sql.types.ArrayType(StringType))))
+  def bpe_pairs(syms: Column): Column = Kernel("bpePairs", arrS, ArrayType(S))(syms)
 
   /** Full BPE re-segmentation (tokenize -> char symbols + </w> -> replay
     * merges in rank order -> flatten) as ONE kernel pass — value-identical
     * to the nested transform(bpe_merge_step) HOF chain (BpeSpec parity). */
   def bpe_segment(text: Column, merges: Seq[(String, String)]): Column =
-    ColumnBridge.column(StaticInvoke(K,
-      org.apache.spark.sql.types.ArrayType(StringType, containsNull = false),
-      "bpeSegment",
-      Seq(ColumnBridge.expression(text),
-        ColumnBridge.expression(lit(merges.map(_._1).toArray)),
-        ColumnBridge.expression(lit(merges.map(_._2).toArray))),
-      inputTypes = Seq(StringType,
-        org.apache.spark.sql.types.ArrayType(StringType),
-        org.apache.spark.sql.types.ArrayType(StringType))))
+    Kernel("bpeSegment", arrS, S, ArrayType(S), ArrayType(S))(
+      text, lit(merges.map(_._1).toArray), lit(merges.map(_._2).toArray))
 
   /** One BPE merge (l, r) -> l+r applied non-overlapping left-to-right
     * over an array<string> symbol column — codegen'd kernel. */
   def bpe_merge_step(syms: Column, l: Column, r: Column): Column =
-    ColumnBridge.column(StaticInvoke(K,
-      org.apache.spark.sql.types.ArrayType(StringType, containsNull = false),
-      "bpeMergeStep",
-      Seq(ColumnBridge.expression(syms), ColumnBridge.expression(l),
-        ColumnBridge.expression(r)),
-      inputTypes = Seq(org.apache.spark.sql.types.ArrayType(StringType),
-        StringType, StringType)))
+    Kernel("bpeMergeStep", arrS, ArrayType(S), S, S)(syms, l, r)
 
   /** MinHash band-bucket hashes (array<bigint>, one per band) of a
     * shingle-hash array column — single-pass codegen'd kernel. */
   def minhash_bands(shingleHashes: Column, numBands: Int, rowsPerBand: Int): Column =
-    ColumnBridge.column(StaticInvoke(K,
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.LongType, containsNull = false),
-      "minhashBands",
-      Seq(ColumnBridge.expression(shingleHashes),
-        ColumnBridge.expression(lit(numBands)), ColumnBridge.expression(lit(rowsPerBand))),
-      inputTypes = Seq(
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.IntegerType)))
+    sqlKernel("minhash_bands")(shingleHashes, lit(numBands), lit(rowsPerBand))
 
   /** All hyperplane-LSH table signatures (array<bigint>, one packed-bits
     * signature per table) of an array<double> vector — one-pass codegen'd
     * kernel, value-identical to the per-bit HOF construction. */
   def hyperplane_sigs(vec: Column, bits: Int, tables: Int): Column =
-    ColumnBridge.column(StaticInvoke(K,
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.LongType, containsNull = false),
-      "hyperplaneSigs",
-      Seq(ColumnBridge.expression(vec),
-        ColumnBridge.expression(lit(bits)), ColumnBridge.expression(lit(tables))),
-      inputTypes = Seq(
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.IntegerType)))
-
-  private val arrD = org.apache.spark.sql.types.ArrayType(
-    org.apache.spark.sql.types.DoubleType)
-  private val arrArrD = org.apache.spark.sql.types.ArrayType(arrD)
-  private val arrArrArrD = org.apache.spark.sql.types.ArrayType(arrArrD)
-  private val arrI = org.apache.spark.sql.types.ArrayType(
-    org.apache.spark.sql.types.IntegerType)
+    sqlKernel("hyperplane_sigs")(vec, lit(bits), lit(tables))
 
   /** PQ subspace codes (array<int>) — one-pass argmin kernel over
     * (subvectors, codebook), HOF-chain value-identical. */
-  def pq_encode(svs: Column, cb: Column): Column = ColumnBridge.column(
-    StaticInvoke(K, org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.IntegerType, containsNull = false), "pqEncode",
-      Seq(ColumnBridge.expression(svs), ColumnBridge.expression(cb)),
-      inputTypes = Seq(arrArrD, arrArrArrD)))
+  def pq_encode(svs: Column, cb: Column): Column =
+    Kernel("pqEncode", ArrayType(IntegerType, containsNull = false), arrArrD, arrArrArrD)(svs, cb)
 
   /** Reconstructed squared norm of PQ codes (double). */
-  def pq_recon_norm2(codes: Column, cb: Column): Column = ColumnBridge.column(
-    StaticInvoke(K, org.apache.spark.sql.types.DoubleType, "pqReconNorm2",
-      Seq(ColumnBridge.expression(codes), ColumnBridge.expression(cb)),
-      inputTypes = Seq(arrI, arrArrArrD)))
+  def pq_recon_norm2(codes: Column, cb: Column): Column =
+    Kernel("pqReconNorm2", DoubleType, arrI, arrArrArrD)(codes, cb)
 
   /** Per-query ADC dot tables (array<array<double>>). */
-  def pq_dot_tables(qsvs: Column, cb: Column): Column = ColumnBridge.column(
-    StaticInvoke(K, arrArrD, "pqDotTables",
-      Seq(ColumnBridge.expression(qsvs), ColumnBridge.expression(cb)),
-      inputTypes = Seq(arrArrD, arrArrArrD)))
+  def pq_dot_tables(qsvs: Column, cb: Column): Column =
+    Kernel("pqDotTables", arrArrD, arrArrD, arrArrArrD)(qsvs, cb)
 
   /** ADC score Σ_s tabs[s][codes[s]] (double). */
-  def pq_adc(codes: Column, tabs: Column): Column = ColumnBridge.column(
-    StaticInvoke(K, org.apache.spark.sql.types.DoubleType, "pqAdc",
-      Seq(ColumnBridge.expression(codes), ColumnBridge.expression(tabs)),
-      inputTypes = Seq(arrI, arrArrD)))
+  def pq_adc(codes: Column, tabs: Column): Column =
+    Kernel("pqAdc", DoubleType, arrI, arrArrD)(codes, tabs)
 
   /** Cosine similarity over two array<double> columns (codegen'd static
     * kernel; callers pre-cast float embeddings ONCE, not per pair). */
-  def cosine_sim(a: Column, b: Column): Column = ColumnBridge.column(
-    StaticInvoke(K, org.apache.spark.sql.types.DoubleType, "cosineSim",
-      Seq(ColumnBridge.expression(a), ColumnBridge.expression(b)),
-      inputTypes = Seq(
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType))))
+  def cosine_sim(a: Column, b: Column): Column = sqlKernel("cosine_sim")(a, b)
 
   /** Micro-unit integer quantization of a double vector (see Kernels.quantizeVec). */
-  def quantize_vec(c: Column): Column = ColumnBridge.column(
-    StaticInvoke(K,
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.LongType, containsNull = false),
-      "quantizeVec", Seq(ColumnBridge.expression(c)),
-      inputTypes = Seq(
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType))))
+  def quantize_vec(c: Column): Column = Kernel("quantizeVec", arrL, arrD)(c)
 
   /** Exact squared L2 distance between two long vectors (see Kernels.l2sqQ). */
-  def l2sq_q(a: Column, b: Column): Column = ColumnBridge.column(
-    StaticInvoke(K, org.apache.spark.sql.types.LongType, "l2sqQ",
-      Seq(ColumnBridge.expression(a), ColumnBridge.expression(b)),
-      inputTypes = Seq(
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType))))
+  def l2sq_q(a: Column, b: Column): Column =
+    Kernel("l2sqQ", LongType, ArrayType(LongType), ArrayType(LongType))(a, b)
 
   /** Register all graft functions for SQL use (`SELECT url_canonicalize(u) ...`). */
   def registerAll(spark: SparkSession): Unit = {
     val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
-
-    def reg1(name: String, fn: String): Unit =
-      registry.createOrReplaceTempFunction(name,
-        (args: Seq[Expression]) => StaticInvoke(K, StringType, fn, args.take(1),
-          inputTypes = Seq(StringType)), "built-in")
-    def reg2(name: String, fn: String): Unit =
-      registry.createOrReplaceTempFunction(name,
-        (args: Seq[Expression]) => StaticInvoke(K, StringType, fn, args.take(2),
-          inputTypes = Seq(StringType, StringType)), "built-in")
-
-    reg1("url_canonicalize", "urlCanonicalize")
-    reg1("url_host", "urlHost")
-    reg1("url_path", "urlPath")
-    reg2("url_resolve", "urlResolve")
-    reg2("url_query_param", "urlQueryParam")
-    reg1("graft_slugify", "slugify")
-    reg1("strip_parens", "stripParens")
-    reg1("normalize_ws", "normalizeWs")
-    reg1("normalize_text", "normalizeText")
-    reg1("normalize_dashes", "normalizeDashes")
-    reg1("ics_escape", "icsEscape")
-    reg1("ics_fold", "icsFold")
-    reg1("mime_guess", "mimeGuess")
-    reg1("desc_fallback", "descFallback")
-    reg1("lz_decompress_utf16", "lzDecompressUtf16")
-    reg1("lexical_to_html", "lexicalToHtml")
-    registry.createOrReplaceTempFunction("simhash64",
-      (args: Seq[Expression]) => StaticInvoke(K,
-        org.apache.spark.sql.types.LongType, "simhash64", args.take(1),
-        inputTypes = Seq(StringType)), "built-in")
-    registry.createOrReplaceTempFunction("shingle_hash64",
-      (args: Seq[Expression]) => StaticInvoke(K,
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType, containsNull = false),
-        "shingleHash64", args.take(2),
-        inputTypes = Seq(StringType, org.apache.spark.sql.types.IntegerType)),
-      "built-in")
-    registry.createOrReplaceTempFunction("word_ngrams",
-      (args: Seq[Expression]) => StaticInvoke(K,
-        org.apache.spark.sql.types.ArrayType(StringType, containsNull = false),
-        "wordNgrams", args.take(2),
-        inputTypes = Seq(StringType, org.apache.spark.sql.types.IntegerType)),
-      "built-in")
-    registry.createOrReplaceTempFunction("chunk_text",
-      (args: Seq[Expression]) => StaticInvoke(K,
-        org.apache.spark.sql.types.ArrayType(StringType, containsNull = false),
-        "chunkText", args.take(2),
-        inputTypes = Seq(StringType, org.apache.spark.sql.types.IntegerType)),
-      "built-in")
-    registry.createOrReplaceTempFunction("chunk_text_stride",
-      (args: Seq[Expression]) => StaticInvoke(K,
-        org.apache.spark.sql.types.ArrayType(StringType, containsNull = false),
-        "chunkTextStride", args.take(3),
-        inputTypes = Seq(StringType, org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.IntegerType)),
-      "built-in")
-    registry.createOrReplaceTempFunction("md5_minhash_bands",
-      (args: Seq[Expression]) => StaticInvoke(K,
-        org.apache.spark.sql.types.ArrayType(StringType, containsNull = false),
-        "md5MinhashBands", args.take(4),
-        inputTypes = Seq(StringType, org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.IntegerType)),
-      "built-in")
-    registry.createOrReplaceTempFunction("winnow_fps",
-      (args: Seq[Expression]) => StaticInvoke(K,
-        org.apache.spark.sql.types.ArrayType(StringType, containsNull = false),
-        "winnowFps", args.take(3),
-        inputTypes = Seq(StringType, org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.IntegerType)),
-      "built-in")
-    registry.createOrReplaceTempFunction("minhash_bands",
-      (args: Seq[Expression]) => StaticInvoke(K,
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType, containsNull = false),
-        "minhashBands", args.take(3),
-        inputTypes = Seq(
-          org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.IntegerType)),
-      "built-in")
-    registry.createOrReplaceTempFunction("hyperplane_sigs",
-      (args: Seq[Expression]) => StaticInvoke(K,
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType, containsNull = false),
-        "hyperplaneSigs", args.take(3),
-        inputTypes = Seq(
-          org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType),
-          org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.IntegerType)),
-      "built-in")
-    registry.createOrReplaceTempFunction("cosine_sim",
-      (args: Seq[Expression]) => StaticInvoke(K,
-        org.apache.spark.sql.types.DoubleType, "cosineSim", args.take(2),
-        inputTypes = Seq(
-          org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType),
-          org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType))),
-      "built-in")
+    sqlFunctions.foreach { case (name, build) =>
+      registry.createOrReplaceTempFunction(name, build, "built-in")
+    }
   }
 }

@@ -100,11 +100,10 @@ object Dedup {
         graft.functions.GraftFunctions.shingle_hash64(col(textCol), n).as("_arr"))
       .select(col("id"), size(col("_arr")).as("n_sh"),
         explode(col("_arr")).as("shingle_h"))
-    // staging on by default: three consumers read sh, and at cluster scale
-    // one materialization beats three corpus scans (A/B at sf0.1: within
-    // noise, 4.4 vs 4.6 s — the knob lets small corpora skip the barrier)
-    val sh = if (sys.env.get("SPARK_GRAFT_Q26_STAGE").contains("0")) shPlan
-             else shPlan.localCheckpoint()
+    // staged once: three consumers read sh, and at cluster scale one
+    // materialization beats three corpus scans (A/B at sf0.1: within
+    // noise, 4.4 vs 4.6 s)
+    val sh = shPlan.localCheckpoint()
     val filtered =
       if (maxShingleFreq <= 0) sh
       else {

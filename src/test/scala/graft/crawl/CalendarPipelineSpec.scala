@@ -46,18 +46,3 @@ class CalendarPipelineSpec extends SparkSuite {
     assert(out2.events.count() === n)
   }
 }
-
-class GraftExtensionsSpec extends org.scalatest.funsuite.AnyFunSuite {
-  test("withExtensions exposes graft SQL functions in a fresh session") {
-    // the shared test session already exists; extensions apply to new
-    // sessions cloned via newSession too — use SQL conf injection route
-    val spark = graft.SparkTestSession.spark
-    val ext = new graft.GraftExtensions
-    // verify the builder-level contract compiles + the injected builders
-    // produce working expressions (probe via the temp-registered twins)
-    val out = spark.sql(
-      "SELECT url_canonicalize('HTTP://X.Y:80/a/../b?z=1&a=2') AS c").collect()(0)
-    assert(out.getString(0) === "http://x.y/b?a=2&z=1")
-    assert(ext != null)
-  }
-}

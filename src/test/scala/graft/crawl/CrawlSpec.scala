@@ -284,4 +284,17 @@ class CrawlSpec extends SparkSuite {
     assert(resumed.seen.count() === run1.seen.count())
     assert(resumed.posts.count() === run1.posts.count())
   }
+
+  test("resume refuses a config that differs from the snapshot's, naming the field") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-snap-mismatch").toString
+    Crawl.run(spark, cfg.copy(maxWaves = 1, snapshotDir = Some(dir)))
+    // the frontier is coordinates-only: a different scale or rev would
+    // silently rebuild different URLs from the same snapshot
+    for ((field, bad) <- Seq(
+        "scale" -> cfg.copy(scale = cfg.scale + 1),
+        "rev" -> cfg.copy(rev = cfg.rev + 1))) {
+      val e = intercept[IllegalArgumentException](Snapshots.resume(spark, dir, bad))
+      assert(e.getMessage.contains(s"$field="), e.getMessage)
+    }
+  }
 }
