@@ -121,11 +121,10 @@ object Daemon {
     // (sso.rs:26-92) — a failed login exhausts retries like any fetch error
     val session =
       if (site.family == "auth") Some(graft.crawl.Sso.bootstrap(site.host)) else None
-    // grammar sanity probe: page-1 list URL must expand (throws on a broken
-    // site definition, like a failed plugin constructor)
+    // grammar sanity probe: the page-1 list page must expand (throws on a
+    // broken site definition, like a failed plugin constructor)
     graft.crawl.SyntheticWeb.expand(
-      graft.crawl.SyntheticWeb.Req(
-        graft.crawl.SyntheticWeb.listUrl(site, 1), site.site_id, "list", 1, 0, 0),
+      graft.crawl.SyntheticWeb.Req(site.site_id, "list", 1, 0, 0),
       opts.scale, opts.limit, opts.rev, session)
     ()
   }

@@ -54,10 +54,10 @@ final case class WaveRow(site_id: String, kind: String, page: Int, row: Int,
     depth: Int, crawl_delay_ms: Int, url_hash: Long, host_hash: Long)
 
 /** A scheduled row leaving the fused pass (politeness clock assigned).
-  * No `url` field: the URL string is grammar-derived from the coordinates
-  * ([[UrlGrammar]]), so the dedup+politeness exchange and the salted
-  * write exchange move 8-byte hashes and small ints instead of the
-  * 60-90-byte URL string — it is re-materialized in the write projection. */
+  * Like every frontier row it carries coordinates, not the URL string, so
+  * the dedup+politeness exchange and the salted write exchange move
+  * 8-byte hashes and small ints instead of a 60-90-byte URL; the string
+  * is rebuilt on read-back ([[UrlGrammar]]). */
 final case class RankedRow(site_id: String, kind: String, page: Int, row: Int,
     depth: Int, crawl_delay_ms: Int, url_hash: Long, host_hash: Long, ready_ms: Long)
 
@@ -179,6 +179,32 @@ object Crawl {
       .toDF("host", "crawl_delay_ms", "disallow")
   }
 
+  /**
+   * Key a coordinate frontier for scheduling: rebuild each row's URL from
+   * its coordinates ([[UrlGrammar]]), canonicalize + hash it (codegen'd
+   * kernels), join the broadcast `robots` rules and enforce Disallow
+   * BEFORE any scheduling work. Only 8-byte hashes of the canonical URL
+   * and of the host travel on through the wave's shuffles — the strings
+   * are recomputed by the same kernels at stage-out time: shuffle bytes
+   * are the contended resource, per-row CPU is not. The fused pass groups
+   * by `host_hash`; 64-bit collisions across a host fleet are negligible,
+   * and the politeness spec verifies per-host spacing on the rebuilt host.
+   * Shared by the batch wave loop and the streaming crawl.
+   */
+  def keyFrontier(frontier: DataFrame, robots: DataFrame, scale: Long, rev: Int): DataFrame =
+    frontier
+      .withColumn("url", UrlGrammar.rebuild_url(col("site_id"), col("kind"),
+        col("page"), col("row"), scale, rev))
+      .withColumn("url_hash", xxhash64(GraftFunctions.url_canonicalize(col("url"))))
+      .withColumn("host", GraftFunctions.url_host(col("url")))
+      .join(robots, Seq("host"), "left")
+      .withColumn("crawl_delay_ms", coalesce(col("crawl_delay_ms"), lit(300)))
+      .filter(coalesce(!exists(col("disallow"),
+        d => GraftFunctions.url_path(col("url")).startsWith(d)), lit(true)))
+      .drop("disallow")
+      .withColumn("host_hash", xxhash64(col("host")))
+      .drop("host")
+
   def seeds(spark: SparkSession, cfg: Config): Dataset[SyntheticWeb.Req] = {
     import spark.implicits._
     val calendarYears = 2 // reference: this year + next (cli main.rs:268-277)
@@ -188,7 +214,7 @@ object Crawl {
     siteSeeds.flatMap { s =>
       if (s.family == "calendar")
         (1 to calendarYears).map(y =>
-          SyntheticWeb.Req(SyntheticWeb.listUrl(s, y), s.site_id, "list", y, 0, 0))
+          SyntheticWeb.Req(s.site_id, "list", y, 0, 0))
       else if (probe) {
         // static pagination fan-out: the page count is computable up front
         // (reference precedent: ssucatch page fan-out S3,
@@ -200,9 +226,9 @@ object Crawl {
         val wanted = math.min(visible, limit)
         val lastPage = math.max(1L, (wanted + s.page_size - 1) / s.page_size).toInt
         (1 to lastPage).map(p =>
-          SyntheticWeb.Req(SyntheticWeb.listUrl(s, p), s.site_id, "list", p, 0, 0))
+          SyntheticWeb.Req(s.site_id, "list", p, 0, 0))
       } else
-        Seq(SyntheticWeb.Req(SyntheticWeb.listUrl(s, 1), s.site_id, "list", 1, 0, 0))
+        Seq(SyntheticWeb.Req(s.site_id, "list", 1, 0, 0))
     }.repartition(spark.sparkContext.defaultParallelism)
   }
 
@@ -247,11 +273,7 @@ object Crawl {
     val emptyLineage = Seq.empty[(Int, Int, Long, Long, Long)]
       .toDF("wave", "partition_id", "scheduled", "deduped", "fetched")
 
-    // the frontier is url-free inside the wave loop (UrlGrammar derives
-    // the string from coordinates at the consumption edges); dropping the
-    // column here normalizes every entry path — fresh seeds (which carry
-    // the Req url) and resumed snapshots (already url-free) alike
-    var frontier = frontier0.drop("url")
+    var frontier = frontier0
     // Growing state is kept as PARTS (one persisted DataFrame per wave) and
     // unioned once at the end: rebuilding a growing union tree inside the
     // loop makes Catalyst/AQE re-plan an ever-larger plan every wave — a
@@ -309,32 +331,8 @@ object Crawl {
       val frontierLive =
         if (midCrawlFailures.isEmpty) frontier
         else frontier.filter(!col("site_id").isin(midCrawlFailures.keys.toSeq: _*))
-      // 1. re-materialize the URL from its grammar coordinates (the
-      //    frontier persists/shuffles only (site_id, kind, page, row,
-      //    depth) — see UrlGrammar), then canonicalize + hash (codegen'd
-      //    kernels), join robots rules (broadcast) and enforce Disallow
-      //    BEFORE any scheduling work. Only the 8-byte HASH of the
-      //    canonical form travels through the wave's shuffles — the
-      //    canonical string itself is recomputed by the (parallel,
-      //    codegen'd) kernel at stage-out time: shuffle bytes are the
-      //    contended resource, per-row CPU is not.
-      val keyed = frontierLive
-        .withColumn("url", UrlGrammar.rebuild_url(col("site_id"), col("kind"),
-          col("page"), col("row"), cfg.scale, cfg.rev))
-        .withColumn("url_hash", xxhash64(GraftFunctions.url_canonicalize(col("url"))))
-        .withColumn("host", GraftFunctions.url_host(col("url")))
-        .join(robotsDf, Seq("host"), "left")
-        .withColumn("crawl_delay_ms", coalesce(col("crawl_delay_ms"), lit(300)))
-        .filter(coalesce(!exists(col("disallow"),
-          d => GraftFunctions.url_path(col("url")).startsWith(d)), lit(true)))
-        .drop("disallow")
-        // like `canonical`, the host STRING is recomputed at stage-out; only
-        // its 8-byte hash travels through the wave's shuffles (the fused pass
-        // groups by host_hash — 64-bit collisions across a host fleet are
-        // negligible, and the politeness spec verifies per-host spacing on
-        // the reconstructed column)
-        .withColumn("host_hash", xxhash64(col("host")))
-        .drop("host")
+      // 1. URL keys + robots Disallow, before any scheduling work
+      val keyed = keyFrontier(frontierLive, robotsDf, cfg.scale, cfg.rev)
 
       // fetch-stage task count follows the session's reducer knob (finer
       // than core count so stragglers overlap), not the raw core count
@@ -460,7 +458,7 @@ object Crawl {
       val probe = cfg.probePagination
       val faults = cfg.faults; val wv = wave
       def expandDs(input: DataFrame, attempt: Int): Dataset[ExpandRow] = input
-        .select("url", "site_id", "kind", "page", "row", "depth")
+        .select("site_id", "kind", "page", "row", "depth")
         .as[SyntheticWeb.Req]
         .mapPartitions(it =>
           expandPartition(it, scale, limit, rev, probe, () => ssoBootstraps.add(1L),
@@ -487,7 +485,7 @@ object Crawl {
           val delays: Map[String, Long] =
             Robots.fleetRules.map(r => r.host -> r.crawl_delay_ms.toLong).toMap
           val reqs = fetchInput
-            .select("url", "site_id", "kind", "page", "row", "depth")
+            .select("site_id", "kind", "page", "row", "depth")
             .as[SyntheticWeb.Req]
           val fetched = ThrottledFetch.run[
               SyntheticWeb.Req, (Option[Post], Seq[SyntheticWeb.Req])](
@@ -542,12 +540,7 @@ object Crawl {
       // scan then pays the cache's row-at-a-time deserialization on the hot
       // path (measured: the biggest single CPU consumer of the 8-core
       // bench). Columnar files read back splittable and prunable.
-      // the link rows persist COORDINATES only — the URL string (~70 B of
-      // the ~100 B row) is grammar-derived, so dropping it shrinks the
-      // inter-wave frontier file (written AND re-read every wave) by ~2/3;
-      // the next wave's `keyed` re-materializes it (UrlGrammar)
       val linksDf = expanded.filter(_.link.isDefined).map(_.link.get).toDF()
-        .drop("url")
       val linksPath = s"$workDir/waves/w$wave/links"
       linksDf.write.mode("overwrite").parquet(linksPath)
       // empty-frontier writes may leave no part files — pin the schema

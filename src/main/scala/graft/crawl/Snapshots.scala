@@ -18,12 +18,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  */
 object Snapshots {
 
-  /** The config fields that, with a row's coordinates, determine its URL
-    * (the frontier stores coordinates, not URLs): each manifest records
-    * them and [[resume]] refuses a config that differs. */
+  /** The inputs that, with a row's coordinates, determine its URL and
+    * schedule (the frontier stores coordinates, not URLs): the config
+    * fields plus a fingerprint of the site table, which fixes every
+    * site's grammar, page size and crawl delay. Each manifest records
+    * them and [[resume]] refuses a run that differs. */
   private def grammarFields(cfg: Crawl.Config): Seq[(String, Any)] = Seq(
     "scale" -> cfg.scale, "limit_per_site" -> cfg.limitPerSite, "rev" -> cfg.rev,
-    "num_salts" -> cfg.numSalts, "probe_pagination" -> cfg.probePagination)
+    "num_salts" -> cfg.numSalts, "probe_pagination" -> cfg.probePagination,
+    "fleet" -> fleetFingerprint)
+
+  private val fleetFingerprint: Int =
+    scala.util.hashing.MurmurHash3.orderedHash(Sites.all.map(_.toString))
 
   def write(spark: SparkSession, dir: String, wave: Int,
       tables: Map[String, DataFrame], cfg: Crawl.Config,
@@ -127,9 +133,9 @@ object Snapshots {
    * construction: the seen-set makes re-fetching a no-op and the schedule
    * is a pure function of the frontier.
    *
-   * A config whose [[grammarFields]] differ from the manifest's would
-   * rebuild different URLs from the stored coordinates, so it is refused,
-   * naming the first differing field.
+   * A config or site table whose [[grammarFields]] differ from the
+   * manifest's would rebuild different URLs from the stored coordinates,
+   * so it is refused, naming the first differing field.
    */
   def resume(spark: SparkSession, dir: String, cfg: Crawl.Config): Crawl.Result = {
     val v = currentVersion(dir).getOrElse(

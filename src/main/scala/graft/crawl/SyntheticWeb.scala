@@ -24,8 +24,11 @@ import graft.model.{Attachment, Post}
  */
 object SyntheticWeb {
 
+  /** A frontier row. Its coordinates (site_id, kind, page, row) are its
+    * whole identity: [[urlAt]] turns them into the URL, [[postIdAt]] into
+    * the post id. `row == page_size` marks the page's robots trap. */
   final case class Req(
-      url: String, site_id: String, kind: String, // list | post
+      site_id: String, kind: String, // list | post
       page: Int, row: Int, depth: Int)
 
   val siteById: Map[String, Site] = Sites.all.map(s => s.site_id -> s).toMap
@@ -208,28 +211,25 @@ object SyntheticWeb {
         val remain = wanted - pageStart
         if (remain <= 0) (None, Seq.empty)
         else {
-          // newest-first: page 1 lists ids total..total-pageSize+1
-          val onPage = math.min(site.page_size.toLong, remain)
-          val ids = (0L until onPage).map { r => idAt(total0, pageStart + r, rev) }
-          val posts = ids.zipWithIndex.map { case (n, r) =>
-            Req(postUrl(site, n), site.site_id, "post", req.page, r, req.depth + 1)
+          // newest-first: row r of page p lists post postIdAt(site, p, r)
+          val onPage = math.min(site.page_size.toLong, remain).toInt
+          val posts = (0 until onPage).map { r =>
+            Req(site.site_id, "post", req.page, r, req.depth + 1)
           }
           val next =
             if (pageStart + onPage < wanted)
-              Seq(Req(listUrl(site, req.page + 1), site.site_id, "list",
-                req.page + 1, 0, req.depth))
+              Seq(Req(site.site_id, "list", req.page + 1, 0, req.depth))
             else Seq.empty
           // every 5th page links a robots-disallowed trap (the frontier's
           // Disallow filter must drop these before scheduling)
           val traps =
             if (req.page % 5 == 0)
-              Seq(Req(s"https://${site.host}/private/trap?id=${req.page}",
-                site.site_id, "post", req.page, site.page_size, req.depth + 1))
+              Seq(Req(site.site_id, "post", req.page, site.page_size, req.depth + 1))
             else Seq.empty
           (None, posts ++ traps ++ next)
         }
       case "post" =>
-        val n = parsePostId(req.url, site)
+        val n = postIdAt(site, req.page, req.row, scale, rev)
         (Some(fetchPost(site, n, rev, Crawl.DefaultSeed)), Seq.empty)
       case k => throw new IllegalArgumentException(k)
     }
@@ -248,21 +248,16 @@ object SyntheticWeb {
       q + (q - 1) / 22
     }
 
-  def isTrap(url: String): Boolean = url.contains("/private/")
+  /** The post listed at (page, row) of a site's board: page 1 row 0 is
+    * the newest visible post. */
+  def postIdAt(site: Site, page: Int, row: Int, scale: Long, rev: Int): Long =
+    idAt(Sites.postCount(site, scale), (page - 1).toLong * site.page_size + row, rev)
 
-  /** Inverse of [[postUrl]] — recover the post id from a discovered URL. */
-  def parsePostId(url: String, site: Site): Long = site.family match {
-    case "gnuboard"  => graft.functions.UrlKernel.queryParam(url, "wr_id").toLong
-    case "wordpress" => graft.functions.UrlKernel.queryParam(url, "slug").stripPrefix("post-").toLong
-    case "ssucatch"  => graft.functions.UrlKernel.queryParam(url, "slug").stripPrefix("notice-").toLong
-    case "offset"    => graft.functions.UrlKernel.queryParam(url, "idx").toLong
-    case "cursor"    => graft.functions.UrlKernel.queryParam(url, "no").toLong
-    case "api"       => graft.functions.UrlKernel.queryParam(url, "id").toLong
-    case "lz" =>
-      new String(java.util.Base64.getDecoder.decode(
-        graft.functions.UrlKernel.queryParam(url, "sbSeq")), "UTF-8").toLong
-    case "auth"      => graft.functions.UrlKernel.queryParam(url, "encSddpbSeq").stripPrefix("enc").toLong
-    case "calendar"  => graft.functions.UrlKernel.queryParam(url, "event").toLong
-    case f           => throw new IllegalArgumentException(f)
-  }
+  /** The URL of a frontier row: the one grammar from coordinates to URL.
+    * A post row at `row == page_size` is the page's robots trap, which
+    * lives under the Disallowed `/private/` prefix. */
+  def urlAt(site: Site, kind: String, page: Int, row: Int, scale: Long, rev: Int): String =
+    if (kind == "list") listUrl(site, page)
+    else if (row == site.page_size) s"https://${site.host}/private/trap?id=$page"
+    else postUrl(site, postIdAt(site, page, row, scale, rev))
 }

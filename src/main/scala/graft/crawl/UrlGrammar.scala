@@ -8,46 +8,21 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * URL synthesis from frontier coordinates — the inverse direction of
- * [[SyntheticWeb.parsePostId]].
- *
- * Every URL the crawl ever schedules is produced by a per-site grammar
- * from (site_id, kind, page, row): list pages by [[SyntheticWeb.listUrl]],
- * post pages by [[SyntheticWeb.postUrl]] over [[SyntheticWeb.idAt]], and
- * the robots-trap links by their fixed path form (the reference plugins
- * work the same way — gnuboard/wordpress/ssucatch URLs are built from
- * (board, page, post-id), never free-form). The frontier therefore does
- * not need to SHUFFLE or PERSIST the URL string between waves: the
- * 8-byte coordinates are the row identity, and this kernel re-materializes
- * the string at the consumption edges (the `keyed` canonicalize/robots
- * stage and the wave stage-out write) — the same recompute-don't-carry
- * treatment `canonical` and `host` already get (guide §2.3/§8: shuffle
- * keys and metadata, recompute/move heavy strings at the edge; per-row
- * CPU is not the contended resource, shuffle and parquet bytes are).
- *
- * Byte-exactness vs the discovery-time URL is pinned by a CrawlSpec
- * walk of the full expansion graph at both revs (including traps, the
- * base64 lz family, auth, and calendar year pages).
+ * The Spark face of [[SyntheticWeb.urlAt]]: the frontier stores only a
+ * row's (site_id, kind, page, row) coordinates, and this kernel turns them
+ * back into the URL string at the consumption edges (the `keyFrontier`
+ * canonicalize/robots stage and the wave stage-out read) — the same
+ * recompute-don't-carry treatment `canonical` and `host` get: shuffle
+ * keys and metadata, recompute heavy strings at the edge, because per-row
+ * CPU is not the contended resource, shuffle and parquet bytes are.
  */
 object UrlGrammar {
 
-  /** Rebuild the exact discovered URL of a frontier row. */
+  /** [[SyntheticWeb.urlAt]] over Spark's string type. */
   def rebuildUrl(siteId: UTF8String, kind: UTF8String, page: Int, row: Int,
-      scale: Long, rev: Int): UTF8String = {
-    val site = SyntheticWeb.siteById(siteId.toString)
-    val url =
-      if (kind.toString == "list")
-        SyntheticWeb.listUrl(site, page)
-      else if (row == site.page_size) // the every-5th-page robots trap
-        s"https://${site.host}/private/trap?id=$page"
-      else {
-        val total0 = Sites.postCount(site, scale)
-        val n = SyntheticWeb.idAt(total0,
-          (page - 1).toLong * site.page_size + row, rev)
-        SyntheticWeb.postUrl(site, n)
-      }
-    UTF8String.fromString(url)
-  }
+      scale: Long, rev: Int): UTF8String =
+    UTF8String.fromString(SyntheticWeb.urlAt(SyntheticWeb.siteById(siteId.toString),
+      kind.toString, page, row, scale, rev))
 
   /** Codegen'd column form (StaticInvoke — no UDF serialization). */
   def rebuild_url(siteId: Column, kind: Column, page: Column, row: Column,

@@ -1,26 +1,27 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types._
 import graft.crawl.{Crawl, SyntheticWeb}
-import graft.functions.GraftFunctions
 
 /**
  * The crawl's wave loop as a SELF-FEEDING Structured Streaming query
  * (SURVEY.md §2.10: the reference daemon is a scheduled micro-batch loop —
  * here the loop itself is the stream):
  *
- *  - the FRONTIER is a watched parquet directory: the seed wave is written
+ *  - the FRONTIER is a watched parquet directory of coordinate rows
+ *    ([[SyntheticWeb.Req]], no URL string): the seed wave is written
  *    first, and every micro-batch appends the links it DISCOVERS back into
  *    the same directory — the file source picks them up as the next
  *    trigger's input, so the breadth expansion drives itself;
- *  - each micro-batch canonicalizes + robots-filters + seen-filters its
- *    slice (the seen set is a parquet state table swapped per batch,
- *    exactly like [[StreamingMerge.foreachBatchMerge]]'s cache), fetches
- *    via the shared per-partition expansion (SSO bootstrap included), and
- *    APPENDS the fetched posts to the output table;
+ *  - each micro-batch keys its slice exactly like a batch wave
+ *    ([[Crawl.keyFrontier]]: URL rebuilt from coordinates, canonicalized,
+ *    hashed, robots-filtered), then seen-filters it (the seen set is a
+ *    parquet state table swapped per batch, exactly like
+ *    [[StreamingMerge.foreachBatchMerge]]'s cache), fetches via the shared
+ *    per-partition expansion (SSO bootstrap included), and APPENDS the
+ *    fetched posts to the output table;
  *  - `query.processAllAvailable()` drains until the frontier stops
  *    growing — the streaming analog of "crawl until the frontier is empty".
  *
@@ -31,11 +32,6 @@ import graft.functions.GraftFunctions
  * (StreamingCrawlSpec).
  */
 object StreamingCrawl {
-
-  private val reqSchema = StructType(Seq(
-    StructField("url", StringType), StructField("site_id", StringType),
-    StructField("kind", StringType), StructField("page", IntegerType),
-    StructField("row", IntegerType), StructField("depth", IntegerType)))
 
   final case class Result(posts: DataFrame, seen: DataFrame, batches: Long)
 
@@ -55,7 +51,8 @@ object StreamingCrawl {
     val probe = cfg.probePagination
     var batches = 0L
 
-    val query = spark.readStream.schema(reqSchema).parquet(frontierDir)
+    val query = spark.readStream.schema(Encoders.product[SyntheticWeb.Req].schema)
+      .parquet(frontierDir)
       .writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime(0L))
@@ -63,13 +60,8 @@ object StreamingCrawl {
         val s = batch.sparkSession
         import s.implicits._
         batches += 1
-        // canonicalize + robots Disallow + in-batch dedup + seen filter
-        val keyed = batch.toDF()
-          .withColumn("url_hash", xxhash64(GraftFunctions.url_canonicalize(col("url"))))
-          .withColumn("host", GraftFunctions.url_host(col("url")))
-          .join(robotsDf, Seq("host"), "left")
-          .filter(coalesce(!exists(col("disallow"),
-            d => GraftFunctions.url_path(col("url")).startsWith(d)), lit(true)))
+        // URL keys + robots Disallow + in-batch dedup + seen filter
+        val keyed = Crawl.keyFrontier(batch.toDF(), robotsDf, scale, rev)
           .dropDuplicates("url_hash")
         // same first-run semantics as the batch cache: ONLY a cleanly
         // missing path is empty — a missing dir WITH `.old` swap leftovers
@@ -79,10 +71,10 @@ object StreamingCrawl {
         val seen = StreamingMerge.readSnapshotOr(s, seenDir)(
           Seq.empty[Long].toDF("url_hash"))
         val fresh = keyed.join(seen, Seq("url_hash"), "left_anti")
-          .select("url_hash", "url", "site_id", "kind", "page", "row", "depth")
+          .select("url_hash", "site_id", "kind", "page", "row", "depth")
           .cache()
         val expanded = fresh
-          .select("url", "site_id", "kind", "page", "row", "depth")
+          .select("site_id", "kind", "page", "row", "depth")
           .as[SyntheticWeb.Req]
           .mapPartitions(it => Crawl.expandPartition(it, scale, limit, rev, probe, () => ()))
         expanded.filter(_.post.isDefined).map(_.post.get).toDF()

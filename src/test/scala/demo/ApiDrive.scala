@@ -105,9 +105,7 @@ object ApiDrive {
     println("sso session: " + sso.host + " cookie len " + sso.cookie.length)
     try {
       graft.crawl.SyntheticWeb.expand(
-        graft.crawl.SyntheticWeb.Req(
-          "https://path.ssu.ac.kr/ptfol/imng/icmpActWait.do?pageIndex=1",
-          "path.ssu.ac.kr", "list", 1, 0, 0), 100, 10, 0)
+        graft.crawl.SyntheticWeb.Req("path.ssu.ac.kr", "list", 1, 0, 0), 100, 10, 0)
       println("ERROR: unauthenticated fetch succeeded")
     } catch { case e: IllegalStateException => println("auth guard: " + e.getMessage.take(80)) }
 

@@ -32,38 +32,70 @@ class CrawlSpec extends SparkSuite {
   test("UrlGrammar.rebuildUrl reproduces every discovered URL byte-for-byte") {
     // Walk the FULL expansion graph (driver-side, no Spark) at both revs:
     // every Req the synthetic web can ever hand the frontier — seeds
-    // (incl. calendar year pages and the probe fan-out), list pagination,
-    // post links, and the every-5th-page robots traps — must rebuild from
-    // its (site_id, kind, page, row) coordinates byte-for-byte, because
-    // the frontier no longer carries the string between waves.
+    // (incl. calendar year pages), list pagination, post links, and the
+    // every-5th-page robots traps. The frontier carries only coordinates,
+    // so the URL rebuilt from them must be the fetched post's own URL,
+    // distinct per coordinate, and Disallowed for every trap.
     val scale = 200L; val limit = 50L
+    val disallow = Robots.fleetRules.map(r => r.host -> r.disallow).toMap
     for (rev <- 0 to 1) {
-      var checked = 0
+      var posts = 0; var traps = 0
       Sites.all.foreach { site =>
         val session =
           if (site.family == "auth") Some(Sso.bootstrap(site.host)) else None
-        var queue = scala.collection.mutable.Queue(
-          SyntheticWeb.Req(SyntheticWeb.listUrl(site, 1), site.site_id, "list", 1, 0, 0))
+        val queue = scala.collection.mutable.Queue(
+          SyntheticWeb.Req(site.site_id, "list", 1, 0, 0))
         if (site.family == "calendar")
-          queue += SyntheticWeb.Req(SyntheticWeb.listUrl(site, 2), site.site_id, "list", 2, 0, 0)
+          queue += SyntheticWeb.Req(site.site_id, "list", 2, 0, 0)
+        val visited = scala.collection.mutable.HashSet.empty[(String, Int, Int)]
+        val urls = scala.collection.mutable.HashMap.empty[String, (String, Int, Int)]
         while (queue.nonEmpty) {
           val req = queue.dequeue()
-          assert(UrlGrammar.rebuildUrl(
-            org.apache.spark.unsafe.types.UTF8String.fromString(req.site_id),
-            org.apache.spark.unsafe.types.UTF8String.fromString(req.kind),
-            req.page, req.row, scale, rev).toString === req.url,
-            s"site=${site.site_id} kind=${req.kind} page=${req.page} row=${req.row} rev=$rev")
-          checked += 1
-          // only expand list pages (post pages yield no links); traps are
-          // never fetched (robots-filtered) but their URLs must rebuild too
-          if (req.kind == "list") {
-            val (_, links) = SyntheticWeb.expand(req, scale, limit, rev, session)
-            queue ++= links
+          val at = (req.kind, req.page, req.row)
+          val where = s"site=${site.site_id} kind=${req.kind} page=${req.page} row=${req.row} rev=$rev"
+          if (visited.add(at)) {
+            val url = UrlGrammar.rebuildUrl(
+              org.apache.spark.unsafe.types.UTF8String.fromString(req.site_id),
+              org.apache.spark.unsafe.types.UTF8String.fromString(req.kind),
+              req.page, req.row, scale, rev).toString
+            urls.put(url, at).foreach(other => fail(s"$where rebuilds $url, as does $other"))
+            if (req.kind == "list")
+              queue ++= SyntheticWeb.expand(req, scale, limit, rev, session)._2
+            else if (req.row == site.page_size) {
+              // traps are never fetched: robots must reject their path
+              assert(!Robots.allowed(graft.functions.UrlKernel.path(url), disallow(site.host)),
+                s"$where trap $url is not Disallowed")
+              traps += 1
+            } else {
+              val (post, links) = SyntheticWeb.expand(req, scale, limit, rev, session)
+              assert(links.isEmpty, where)
+              assert(post.map(_.url) === Some(url), where)
+              assert(post.map(_.id) ===
+                Some(SyntheticWeb.postIdAt(site, req.page, req.row, scale, rev).toString), where)
+              posts += 1
+            }
           }
         }
       }
-      assert(checked > 500, s"rev=$rev walked only $checked reqs — walk broken?")
+      assert(posts > 500, s"rev=$rev fetched only $posts posts — walk broken?")
+      assert(traps > 0, s"rev=$rev met no robots trap — walk broken?")
     }
+  }
+
+  test("frontier files hold exactly the coordinate Req schema: wave links, snapshot, streaming") {
+    val req = org.apache.spark.sql.Encoders.product[SyntheticWeb.Req].schema
+      .map(f => f.name -> f.dataType)
+    def fields(path: String) =
+      spark.read.parquet(path).schema.map(f => f.name -> f.dataType)
+    val small = Crawl.Config(scale = 60, limitPerSite = 10,
+      include = Seq("biz.ssu.ac.kr", "bioinfo.ssu.ac.kr"))
+    val dir = java.nio.file.Files.createTempDirectory("graft-frontier-schema").toString
+    Crawl.run(spark, small.copy(maxWaves = 1, snapshotDir = Some(dir)))
+    assert(fields(s"$dir/waves/w0/links") === req)
+    assert(fields(s"$dir/snapshots/v0/frontier") === req)
+    val sdir = java.nio.file.Files.createTempDirectory("graft-frontier-schema-s").toString
+    graft.streaming.StreamingCrawl.run(spark, small, sdir)
+    assert(fields(s"$sdir/frontier") === req)
   }
 
   test("crawl is deterministic: two runs produce identical order and seen set") {
@@ -296,5 +328,20 @@ class CrawlSpec extends SparkSuite {
       val e = intercept[IllegalArgumentException](Snapshots.resume(spark, dir, bad))
       assert(e.getMessage.contains(s"$field="), e.getMessage)
     }
+  }
+
+  test("resume refuses a snapshot written under a different site table, naming fleet") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-snap-fleet").toString
+    Crawl.run(spark, cfg.copy(maxWaves = 1, snapshotDir = Some(dir)))
+    // stand-in for a changed site table: every rebuilt URL and delay may
+    // differ, so the recorded fleet fingerprint must block the resume
+    val manifest = java.nio.file.Paths.get(dir, "snapshots", "v0", "manifest.json")
+    val node = graft.sinks.SiteJson.mapper.readTree(java.nio.file.Files.readString(manifest))
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    assert(node.has("fleet"), "the manifest must record the fleet fingerprint")
+    node.put("fleet", node.get("fleet").asInt + 1)
+    java.nio.file.Files.writeString(manifest, node.toPrettyString)
+    val e = intercept[IllegalArgumentException](Snapshots.resume(spark, dir, cfg))
+    assert(e.getMessage.contains("fleet="), e.getMessage)
   }
 }

@@ -26,7 +26,7 @@ class SsoSpec extends SparkSuite {
     val site = SyntheticWeb.siteById("path.ssu.ac.kr")
     intercept[IllegalStateException] {
       SyntheticWeb.expand(
-        SyntheticWeb.Req(SyntheticWeb.listUrl(site, 1), site.site_id, "list", 1, 0, 0),
+        SyntheticWeb.Req(site.site_id, "list", 1, 0, 0),
         100, 10, 0, session = None)
     }
   }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSuite
-import graft.crawl.Crawl
+import graft.crawl.{Crawl, UrlGrammar}
 import org.apache.spark.sql.functions._
 
 /** The self-feeding streaming crawl drains the frontier and produces the
@@ -32,6 +32,8 @@ class StreamingCrawlSpec extends SparkSuite {
     // drained: no unprocessed frontier rows remain (every written link is
     // in the seen set — a second run over the same state finds nothing new)
     val frontier = spark.read.parquet(s"$dir/frontier")
+      .withColumn("url", UrlGrammar.rebuild_url(col("site_id"), col("kind"),
+        col("page"), col("row"), cfg.scale, cfg.rev))
       .withColumn("url_hash",
         xxhash64(graft.functions.GraftFunctions.url_canonicalize(col("url"))))
     val unseen = frontier.join(streamed.seen, Seq("url_hash"), "left_anti")
