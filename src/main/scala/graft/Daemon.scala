@@ -23,8 +23,8 @@ import graft.crawl.{Crawl, Pipeline}
  * Jan 1 -> next year Dec 31, main.rs:268-277).
  *
  * Flow (main.rs:82-126): crawl all selected sites -> MERGE into the cache
- * -> newest-first top-K -> per-site JSON + RSS + calendar ICS + report,
- * then persist the new cache snapshot.
+ * -> newest-first top-K ([[Pipeline.cycle]]) -> per-site JSON + RSS +
+ * calendar ICS + report, then persist the new cache snapshot.
  */
 object Daemon {
 
@@ -135,8 +135,7 @@ object Daemon {
     // analog of the reference's per-site cache files, mod.rs:269-301).
     // ONLY a missing path is a first run; corruption/permissions/IO errors
     // propagate (reference daemon read_cache special-cases NotFound only)
-    val cache = graft.streaming.StreamingMerge.readSnapshotOr(spark, opts.cache)(
-      Pipeline.emptyCache(spark))
+    val cache = graft.streaming.StreamingMerge.readCacheOrEmpty(spark, opts.cache)
 
     // site selection BEFORE task creation (macros.rs:46-113), then per-site
     // preflight with whole-site retry (mod.rs:38-93); survivors form the
@@ -168,9 +167,8 @@ object Daemon {
         graft.sinks.Publish.markdownReport(failEvents))
       val empty = Pipeline.emptyCache(spark)
       return RunResult(
-        Pipeline.Output(empty, cache, spark.emptyDataFrame,
-          spark.emptyDataFrame, failEvents,
-          spark.emptyDataFrame, spark.emptyDataFrame),
+        Pipeline.Output(empty, cache, empty, spark.emptyDataFrame,
+          spark.emptyDataFrame, failEvents, spark.emptyDataFrame),
         failedSites)
     }
 
@@ -181,73 +179,30 @@ object Daemon {
     // preflight failures + mid-crawl retry exhaustion feed ONE error tally
     // (reference cli main.rs:118-125 — any failed site fails the run)
     val allFailed = failedSites ++ crawl.failedSites
-
-    val order = crawl.schedule.select(col("url"),
-      ((col("page").cast("long") * 1000000L) + col("row")).as("seq"))
-    val newPosts = crawl.posts.join(order, Seq("url"), "left")
-      .withColumn("seq", coalesce(col("seq"), lit(0L)))
-
-    // INCREMENTAL merge — the product path for a 10^10-row cache:
-    //  - only the crawled sites' partitions are SCANNED (partition pruning
-    //    on the isin filter — untouched sites contribute zero read or
-    //    shuffle rows to the merge);
-    //  - within the touched slice, only cache rows whose (site_id, id)
-    //    appears in the crawl batch enter the full-outer merge join (the
-    //    batch's key set rides as a BROADCAST semi/anti join — the cache
-    //    side needs no Exchange, and the shuffle is O(batch), not
-    //    O(touched-site history); DaemonSpec audits the shuffle volume);
-    //  - only the crawled sites' partitions are REWRITTEN (dynamic
-    //    partition overwrite below) — a bounded per-run batch never
-    //    rewrites the full cache state.
-    // a site that failed mid-crawl keeps its previous cache partition
-    // untouched (a failed plugin run must not disturb persisted state)
-    val touched = liveSiteIds.filterNot(crawl.failedSites.keySet)
-    val cacheTouched = cache.filter(col("site_id").isin(touched: _*))
-    val cacheUntouched = cache.filter(!col("site_id").isin(touched: _*))
-    val merged = graft.operators.Merge.mergeEntriesIncremental(cacheTouched, newPosts, opts.now)
-    // Canonical storage layout before the write-back: one exchange keyed by
-    // site_id with a (rank, id) sort inside each site. This (a) writes ONE
-    // file per site partition instead of one per (site × shuffle partition)
-    // — the next run's partition-pruned read scans a single file per site
-    // — and (b) makes the persisted bytes a pure function of the logical
-    // cache state, so an identical daemon cycle publishes an identical
-    // tree and the commit no-ops. The exchange moves only the touched
-    // slice, which the dynamic partition overwrite is about to rewrite to
-    // storage anyway; the MERGE itself no longer shuffles site history
-    // (broadcast key semi/anti above).
-    // localCheckpoint both stages it once for the several consumers below
-    // AND breaks the cache-read lineage so the dynamic overwrite may write
-    // back to the same path it was read from
-    val touchedPosts = merged.posts
-      .repartition(col("site_id"))
-      .sortWithinPartitions(col("site_id"), col("rank"), col("id"))
-      .localCheckpoint()
-    // sinks cover the sites this run crawled (the reference daemon emits
-    // outputs per crawled plugin, main.rs:192-243 — untouched sites keep
-    // their previous outputs and are neither scanned nor rewritten)
-    val top = graft.operators.Merge.topKPerSite(touchedPosts, opts.limit.toInt)
+    val cycle = Pipeline.cycle(cfg, crawl, cache, opts.now)
 
     // crawl_success (one per successfully crawled site — the reference
     // emits it per finished plugin, core/mod.rs:53-87) and crawl_failed
     // events join the content events (reference writes both the content
     // report and the error report, main.rs:300-340)
     val statusEvents = (
-      touched.map(site => (site, "crawl_success", null: String, null: String, null: String)) ++
+      Pipeline.touchedSites(cfg, crawl)
+        .map(site => (site, "crawl_success", null: String, null: String, null: String)) ++
       allFailed.toSeq
         .map { case (site, e) => (site, "crawl_failed", null: String, e.getMessage, null: String) })
       .toDF("site_id", "event", "post_id", "title", "url")
-    // checkpointed like touchedPosts: the event rows read the touched cache
-    // partitions, which the dynamic overwrite below REPLACES — a lazy plan
-    // would dangle on the pre-overwrite file listing
-    val events = merged.events.unionByName(statusEvents).localCheckpoint()
+    // checkpointed like the cycle's touched slice: the event rows read the
+    // touched cache partitions, which the dynamic overwrite below REPLACES —
+    // a lazy plan would dangle on the pre-overwrite file listing
+    val events = cycle.events.unionByName(statusEvents).localCheckpoint()
 
     // sinks (cli main.rs:192-243 layout). DYNAMIC partition overwrite:
     // this run's sinks cover only the crawled sites, and a reused out/ dir
     // must keep the uncrawled sites' last-good files (the reference's
     // `cp -rv out/* .` publish only ever adds/overwrites) — the default
     // STATIC mode would truncate the whole sites/ and rss/ trees first
-    graft.sinks.SiteJson.write(graft.sinks.SiteJson.perSite(top), s"${opts.out}/sites")
-    graft.sinks.Rss.perSite(top).repartition(col("site_id"))
+    graft.sinks.SiteJson.write(cycle.siteJson, s"${opts.out}/sites")
+    cycle.rss.repartition(col("site_id"))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("site_id").text(s"${opts.out}/rss")
@@ -274,7 +229,7 @@ object Daemon {
     // commit); every other site's files are untouched on disk — the
     // scale-safe analog of the reference's per-site cache persistence
     // (mod.rs:269-301). The calendar cache stays a (small) snapshot swap.
-    touchedPosts.write.mode("overwrite")
+    cycle.touched.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("site_id")
       .parquet(opts.cache)
@@ -307,12 +262,7 @@ object Daemon {
         exclude = Seq("reports"))
     }
 
-    val fullCache = cacheUntouched.select(touchedPosts.columns.map(col): _*)
-      .unionByName(touchedPosts)
-    RunResult(
-      Pipeline.Output(top, fullCache, graft.sinks.SiteJson.perSite(top),
-        graft.sinks.Rss.perSite(top), events, crawl.schedule, crawl.lineage),
-      allFailed)
+    RunResult(cycle.copy(events = events), allFailed)
   }
 
   def main(args: Array[String]): Unit = {

@@ -66,8 +66,8 @@ object SparkEntry {
   // count prune the payload columns out of the join+windows entirely —
   // cheaper than materializing the full-width merge once (A/B'd: a staged
   // localCheckpoint costs q04 3.4s of payload materialization to save
-  // q05 1.1s). The daemon pipeline (q37/q38), whose consumers DO read all
-  // columns, stages its merge instead (Pipeline.runDaemon).
+  // q05 1.1s). The daemon cycle (q37/q38), whose consumers DO read all
+  // columns, stages its merged slice instead (Pipeline.cycle).
   private def mergedOrders(s: SparkSession, dir: String): Merge.MergeResult =
     Merge.mergeEntries(ordersOld(s, dir), ordersNew(s, dir), mergeNow)
 
@@ -76,8 +76,8 @@ object SparkEntry {
     * dry-run shape: limit 20, dry-run.yml:16). */
   def entry(spark: SparkSession): DataFrame = {
     import graft.crawl.{Crawl, Pipeline}
-    Pipeline.runDaemon(spark, Crawl.Config(scale = 60, limitPerSite = 20),
-      Pipeline.emptyCache(spark), mergeNow, topK = 20).topPosts
+    val cfg = Crawl.Config(scale = 60, limitPerSite = 20)
+    Pipeline.cycle(cfg, Crawl.run(spark, cfg), Pipeline.emptyCache(spark), mergeNow).topPosts
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -416,9 +416,8 @@ object SparkEntry {
 
     "q38_recrawl_events" -> { (s, _) =>
       val cfg1 = crawlCfg.copy(rev = 1)
-      val run1 = graft.crawl.Pipeline.runDaemon(s, cfg1,
-        cachedDaemonRun0(s).cache, Timestamp.valueOf("2026-01-16 00:00:00"),
-        topK = 30, precomputedCrawl = Some(cachedCrawl(s, cfg1)))
+      val run1 = graft.crawl.Pipeline.cycle(cfg1, cachedCrawl(s, cfg1),
+        cachedDaemonRun0(s).cache, Timestamp.valueOf("2026-01-16 00:00:00"))
       run1.events.groupBy("event").agg(count(lit(1)).as("n"))
     },
 
@@ -506,7 +505,7 @@ object SparkEntry {
     // Structured Streaming query over a watched frontier directory;
     // equality with the batch crawl asserted in StreamingCrawlSpec ----
     "q49_streaming_crawl" -> { (s, _) =>
-      val dir = scratchDir("graft-scrawl-q")
+      val dir = graft.crawl.TempDirs.create("graft-scrawl-q")
       val r = withStreamShuffle(s)(graft.streaming.StreamingCrawl.run(s,
         graft.crawl.Crawl.Config(scale = 60, limitPerSite = 10), dir))
       r.posts.groupBy("site_id").agg(count(lit(1)).as("n_posts"))
@@ -522,7 +521,7 @@ object SparkEntry {
     "q58_streaming_sessions" -> { (s, dir) =>
       import s.implicits._
       import graft.streaming.{SessEvent, StreamingSessions}
-      val tmp = scratchDir("graft-ssess-q")
+      val tmp = graft.crawl.TempDirs.create("graft-ssess-q")
       // the slice never reaches the driver (the q88 pattern): chunk
       // membership comes from the chronological rank over the bounded
       // 200-row slice. In-file row order is irrelevant to the event-time
@@ -567,7 +566,7 @@ object SparkEntry {
     // Output carries (fp, text) only: whichever duplicate row wins, the
     // emitted columns are identical, so the result is order-independent. ----
     "q88_streaming_dedup" -> { (s, dir) =>
-      val tmp = scratchDir("graft-sdedup-q")
+      val tmp = graft.crawl.TempDirs.create("graft-sdedup-q")
       // chunk by doc_id RANGE so the micro-batch COUNT stays ~6 at any sf
       // (the output is winner-independent — it equals batch DISTINCT under
       // any chunking — but 50+ one-file triggers would spend the bench on
@@ -760,7 +759,7 @@ object SparkEntry {
     // ---- BPE tokenizer training (Sennrich et al. 2016) — merge stats
     // live on the word-TYPE table, one collected argmax row per round.
     // Learning is deterministic per corpus, so q76/q77 share one memoized
-    // run (the crawlMemo pattern) ----
+    // run (the crawl's memo) ----
     "q76_bpe_learn" -> { (s, dir) =>
       import s.implicits._
       bpeLearned(s, dir).toDF("rank", "left", "right", "merged", "pair_count")
@@ -901,35 +900,49 @@ object SparkEntry {
   /** Daemon-production-shaped crawl config (limit 30, daemon.yml:26-29). */
   private val crawlCfg = graft.crawl.Crawl.Config(scale = 100, limitPerSite = 30)
 
-  /** Transient fixture dir for the streaming queries, tmpfs-backed when
-    * available (guide §6: the micro-batch input files, state stores and
-    * commit logs are RAM-transient scratch — putting them on /dev/shm
-    * removes per-trigger fsync/disk jitter; the crawl's wave stage-out
-    * already does this). Registered for JVM-exit cleanup. */
-  private def scratchDir(prefix: String): String = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val base = if (java.nio.file.Files.isWritable(shm)) shm
-               else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val dir = java.nio.file.Files.createTempDirectory(base, prefix)
-    graft.crawl.TempDirs.register(dir)
-    dir.toString
-  }
+  /**
+   * The one per-session memo: results several queries share (a staged
+   * table, a collected merge list, a crawl), keyed by (session, key). An
+   * entry lives until its SparkContext ends — one listener per context
+   * releases that context's entries in `onApplicationEnd`.
+   *
+   * A build may memo its own inputs (clusters build pairs, the daemon cycle
+   * builds its crawl), so it runs outside the map: get, build, then
+   * `putIfAbsent`, returning the winner. A nested `computeIfAbsent` on the
+   * same map would throw "Recursive update".
+   */
+  private val memos = new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), AnyRef]()
+  private val memoContexts =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[org.apache.spark.SparkContext]()
+
+  private[graft] def memo[T <: AnyRef](s: SparkSession, key: String)(build: => T): T =
+    Option(memos.get((s, key))).getOrElse {
+      val sc = s.sparkContext
+      if (memoContexts.add(sc)) sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+        override def onApplicationEnd(
+            end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
+          releaseMemos(sc)
+          memoContexts.remove(sc)
+        }
+      })
+      val built = build
+      Option(memos.putIfAbsent((s, key), built)).getOrElse(built)
+    }.asInstanceOf[T]
+
+  /** Drop every memo entry of `sc`'s sessions (what its listener runs). */
+  private[graft] def releaseMemos(sc: org.apache.spark.SparkContext): Unit =
+    memos.keySet.removeIf(_._1.sparkContext eq sc)
 
   /** q26, q51 and q52 all derive from the SAME exact-Jaccard pair table
     * (and q51/q52 from the same transitive clusters) — the "detect once,
     * consume many" dedup-pipeline shape. One staged pair table + one
-    * cluster table per (session, sf dir), the cachedKmeans pattern. */
-  private val ngramPairsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+    * cluster table per (session, sf dir). */
   private def cachedNgramPairs(s: SparkSession, dir: String): DataFrame =
-    ngramPairsMemo.computeIfAbsent((s, dir), _ =>
+    memo(s, s"ngram-pairs:$dir")(
       Dedup.ngramJaccardPairs(t(s, dir, "documents"), "doc_id", "text", 3, 0.5,
         maxShingleFreq = 20L).localCheckpoint(eager = false))
-  private val ngramClustersMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
   private def cachedNgramClusters(s: SparkSession, dir: String): DataFrame =
-    ngramClustersMemo.computeIfAbsent((s, dir), _ =>
-      Dedup.nearDupClusters(cachedNgramPairs(s, dir)))
+    memo(s, s"ngram-clusters:$dir")(Dedup.nearDupClusters(cachedNgramPairs(s, dir)))
 
   /** The streaming fixtures carry a few thousand keys; the state-store /
     * shuffle partition count should track state size, not the host's core
@@ -977,11 +990,9 @@ object SparkEntry {
 
   /** Learned BPE merge table per (session, sf dir) — q76 and q77 both
     * need it; learning is deterministic, so one run serves both. */
-  private val bpeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[(Int, String, String, String, Long)]]()
   private def bpeLearned(s: SparkSession, dir: String)
       : Seq[(Int, String, String, String, Long)] =
-    bpeMemo.computeIfAbsent((s, dir), _ =>
+    memo(s, s"bpe:$dir")(
       operators.Bpe.learnMerges(
           operators.Bpe.wordCounts(t(s, dir, "documents"), "text"), 6)
         .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2),
@@ -991,34 +1002,24 @@ object SparkEntry {
     * memoized k-means assignment (the real-pipeline shape: cluster once,
     * derive dedup/sampling/stats from the same assignment). The staged
     * checkpoint holds (id, cluster, dist_q) only — rows, not vectors. */
-  private val kmeansMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
   private def cachedKmeans(s: SparkSession, dir: String): DataFrame =
-    kmeansMemo.computeIfAbsent((s, dir), _ =>
+    memo(s, s"kmeans:$dir")(
       Similarity.kmeansClusters(t(s, dir, "embeddings"), "vec_id", "embedding",
         k = 8, iters = 3).localCheckpoint())
 
   /** The crawl is deterministic, so queries q34..q44 share one memoized
     * run per (session, config) instead of re-crawling 8 times in Verify. */
-  private val crawlMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, graft.crawl.Crawl.Config), graft.crawl.Crawl.Result]()
   private def cachedCrawl(s: SparkSession,
       cfg: graft.crawl.Crawl.Config): graft.crawl.Crawl.Result =
-    crawlMemo.computeIfAbsent((s, cfg), _ => graft.crawl.Crawl.run(s, cfg))
+    memo(s, s"crawl:$cfg")(graft.crawl.Crawl.run(s, cfg))
 
-  /** q37 and q38 both need the SAME rev-0 daemon run (crawl -> merge ->
-    * feeds over the empty cache): share one, fed by the memoized crawl
-    * stage; the merged cache is checkpointed once (it's ~500 rows) so the
-    * recrawl query doesn't recompute the rev-0 merge. */
-  private val daemonMemo = new java.util.concurrent.ConcurrentHashMap[
-    SparkSession, graft.crawl.Pipeline.Output]()
+  /** q37 and q38 both need the SAME rev-0 daemon cycle (crawl -> merge ->
+    * feeds over the empty cache): share one, fed by the memoized crawl.
+    * The cycle stages its merged slice, so the recrawl query does not
+    * recompute the rev-0 merge. */
   private def cachedDaemonRun0(s: SparkSession): graft.crawl.Pipeline.Output =
-    daemonMemo.computeIfAbsent(s, _ => {
-      val out = graft.crawl.Pipeline.runDaemon(s, crawlCfg,
-        graft.crawl.Pipeline.emptyCache(s), mergeNow, topK = 30,
-        precomputedCrawl = Some(cachedCrawl(s, crawlCfg)))
-      out.copy(cache = out.cache.localCheckpoint(eager = false))
-    })
+    memo(s, "daemon-run0")(graft.crawl.Pipeline.cycle(crawlCfg, cachedCrawl(s, crawlCfg),
+      graft.crawl.Pipeline.emptyCache(s), mergeNow))
 
   /**
    * BPE oracle generator: unrolls `rounds` merge iterations as a DuckDB

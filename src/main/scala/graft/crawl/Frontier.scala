@@ -17,7 +17,7 @@ import graft.model.Post
  *  1. canonicalize + hash every URL (codegen'd kernel expressions);
  *  2. in-wave dedup on url_hash (keep the breadth-first-smallest order key);
  *  3. seen-set filter: Bloom pre-filter + exact anti-join on the maybe
- *     slice ([[SeenSet.filterNew]]);
+ *     slice ([[SeenSet.filterNewProbe]] over an incremental sketch);
  *  4. politeness schedule: per-HOST virtual clock — the k-th fetch of a
  *     host is scheduled at (k-1) * crawl_delay(host) (robots-derived
  *     delays; reference precedent: fixed 300 ms,
@@ -62,11 +62,12 @@ final case class RankedRow(site_id: String, kind: String, page: Int, row: Int,
     depth: Int, crawl_delay_ms: Int, url_hash: Long, host_hash: Long, ready_ms: Long)
 
 /**
- * JVM-wide registry of transient crawl work dirs, reclaimed by ONE shutdown
- * hook (registering a hook per Crawl.run would accumulate threads in
- * long-lived sessions). Deletion walks depth-first with the directory
- * stream closed eagerly (Files.walk in try/finally — Files.list left open
- * leaks an fd per directory during the recursive delete).
+ * JVM-wide registry of transient work dirs (crawl stage-out, streaming
+ * fixtures), reclaimed by ONE shutdown hook (registering a hook per
+ * Crawl.run would accumulate threads in long-lived sessions). Deletion
+ * walks depth-first with the directory stream closed eagerly (Files.walk in
+ * try/finally — Files.list left open leaks an fd per directory during the
+ * recursive delete).
  */
 private[graft] object TempDirs {
   private val dirs = java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
@@ -81,7 +82,21 @@ private[graft] object TempDirs {
       } catch { case _: Throwable => () }
     }
   }))
-  def register(dir: java.nio.file.Path): Unit = { hook; dirs.add(dir); () }
+
+  /** A new registered temp dir: on tmpfs (/dev/shm) when writable — the
+    * contents are transient, and RAM-backed scratch removes disk-IO and
+    * fsync jitter — else under java.io.tmpdir. The dir lives until JVM
+    * exit: result DataFrames lazily re-read its files for the session's
+    * lifetime, so earlier deletion would break downstream consumers. */
+  def create(prefix: String): String = {
+    val shm = java.nio.file.Paths.get("/dev/shm")
+    val base = if (java.nio.file.Files.isWritable(shm)) shm
+               else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    val dir = java.nio.file.Files.createTempDirectory(base, prefix)
+    hook
+    dirs.add(dir)
+    dir.toString
+  }
 }
 
 object Crawl {
@@ -252,21 +267,9 @@ object Crawl {
 
     val robotsDf = broadcast(robots(spark))
     val ssoBootstraps = spark.sparkContext.longAccumulator("sso_bootstraps")
-    // wave stage-out root: the snapshot dir when snapshotting, else a temp
-    // (tmpfs when available — wave files are transient and RAM-backed
-    // stage-out removes disk-IO jitter; a cluster would use HDFS/S3 here)
-    val workDir = cfg.snapshotDir.getOrElse {
-      val shm = java.nio.file.Paths.get("/dev/shm")
-      val base = if (java.nio.file.Files.isWritable(shm)) shm
-                 else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-      val dir = java.nio.file.Files.createTempDirectory(base, "graft-crawl-")
-      // transient stage-out is reclaimed at JVM exit — result DataFrames
-      // lazily re-read these files for the session's lifetime, so earlier
-      // deletion would break downstream consumers; without the cleanup
-      // every crawl leaks its wave files into tmpfs
-      TempDirs.register(dir)
-      dir.toString
-    }
+    // wave stage-out root: the snapshot dir when snapshotting, else a
+    // transient dir reclaimed at JVM exit (a cluster would use HDFS/S3 here)
+    val workDir = cfg.snapshotDir.getOrElse(TempDirs.create("graft-crawl-"))
     val emptySchedule = Seq.empty[(Int, String, String, String, Long, String, Int, Int, Int, Long, Int)]
       .toDF("wave", "host", "url", "canonical", "url_hash", "site_id", "page", "row", "depth",
         "ready_ms", "crawl_delay_ms")

@@ -61,10 +61,7 @@ object Merge {
    * reference's stable sort tiebreaker. Emits posts (+`rank`) and a
    * `post_created`/`post_updated` event table.
    */
-  def mergeEntries(oldDf: DataFrame, newDf: DataFrame, now: Timestamp,
-      stageResult: Boolean = false): MergeResult = {
-    val spark = oldDf.sparkSession
-
+  def mergeEntries(oldDf: DataFrame, newDf: DataFrame, now: Timestamp): MergeResult = {
     val oldRanked =
       if (oldDf.columns.contains("rank")) oldDf
       else oldDf.withColumn("rank",
@@ -125,7 +122,7 @@ object Merge {
     val createdAt = when(isUpdate && nc("updated_at").isNotNull, nc("created_at"))
       .otherwise(pick("created_at"))
 
-    val merged0 = joined.select(
+    val merged = joined.select(
       (postCols.map {
         case "created_at" => createdAt.as("created_at")
         case f            => pick(f).as(f)
@@ -134,10 +131,6 @@ object Merge {
         when(isInsert, lit("post_created"))
           .when(isUpdate, lit("post_updated"))
           .otherwise(lit(null).cast("string")).as("_event")): _*)
-    // stageResult: materialize the joined/window'd merge ONCE (lazily, on
-    // first consumer) so posts and events don't each re-run the full-outer
-    // join + three windows — the one-crawl-many-consumers daemon shape.
-    val merged = if (stageResult) merged0.localCheckpoint(eager = false) else merged0
 
     val events = merged.filter(col("_event").isNotNull)
       .select(col("site_id"), col("_event").as("event"), col("id").as("post_id"),

@@ -88,10 +88,7 @@ object StreamingMerge {
    * instead of silently restarting history from empty.
    */
   private[graft] def readCacheOrEmpty(spark: SparkSession, cacheDir: String): DataFrame =
-    readSnapshotOr(spark, cacheDir) {
-      import spark.implicits._
-      spark.emptyDataset[Post].toDF().withColumn("rank", lit(0L))
-    }
+    readSnapshotOr(spark, cacheDir)(graft.crawl.Pipeline.emptyCache(spark))
 
   /** Generic snapshot read with the narrow first-run semantics above. */
   private[graft] def readSnapshotOr(spark: SparkSession, dir: String)(

@@ -62,7 +62,8 @@ object ApiDrive {
     println("noop events: " + noop.events.count + " rows kept: " + noop.posts.count)
 
     // 4. Crawl engine end-to-end (deterministic synthetic web)
-    val crawl = graft.crawl.Crawl.run(spark, graft.crawl.Crawl.Config(scale = 100, limitPerSite = 20))
+    val crawlCfg = graft.crawl.Crawl.Config(scale = 100, limitPerSite = 20)
+    val crawl = graft.crawl.Crawl.run(spark, crawlCfg)
     println("crawl: posts=" + crawl.posts.count + " seen=" + crawl.seen.count +
       " waves=" + crawl.lineage.select("wave").distinct.count)
     crawl.schedule.orderBy("wave", "ready_ms", "host", "site_id", "page", "row")
@@ -76,10 +77,9 @@ object ApiDrive {
       .filter(!$"m").count
     println("cuckoo false negatives: " + fp + " (must be 0)")
 
-    // 6. Daemon pipeline: merge + top-K + RSS
-    val out = graft.crawl.Pipeline.runDaemon(spark,
-      graft.crawl.Crawl.Config(scale = 100, limitPerSite = 20),
-      graft.crawl.Pipeline.emptyCache(spark), java.sql.Timestamp.valueOf("2026-03-01 00:00:00"), topK = 10)
+    // 6. Daemon cycle over that crawl: merge + top-K + RSS
+    val out = graft.crawl.Pipeline.cycle(crawlCfg, crawl,
+      graft.crawl.Pipeline.emptyCache(spark), java.sql.Timestamp.valueOf("2026-03-01 00:00:00"))
     println("pipeline sites with feeds: " + out.rss.count)
 
     // 7. Similarity: codegen'd cosine kernel (SQL + Column), exact tile

@@ -46,6 +46,32 @@ class DaemonSpec extends SparkSuite {
     assert(next.count() === out.cache.count())
   }
 
+  test("the CLI ships what the oracle checks: run 1 feeds = q37, run 2 content events = q38") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-daemon-parity").toString
+    val run1 = Daemon.Options(out = s"$dir/out", cache = s"$dir/cache", limit = 30, scale = 100)
+    Daemon.run(spark, run1)
+    // the per-site feed files on disk: site_json exactly as written; each
+    // rss file is the one rss_xml string plus the text writer's newline
+    val shipped = spark.read.option("wholetext", "true").text(s"$dir/out/rss")
+      .select(col("site_id"), (length(col("value")) - 1).as("rss_bytes"))
+      .join(spark.read.json(s"$dir/out/sites")
+        .select(col("site_id"), length(col("site_json")).as("json_bytes")), Seq("site_id"))
+    val q37 = SparkEntry.queries("q37_pipeline_feeds")(spark, "")
+    val cols = Seq("site_id", "rss_bytes", "json_bytes").map(col)
+    assert(shipped.count() > 0)
+    assert(shipped.select(cols: _*).collect().toSet === q37.select(cols: _*).collect().toSet)
+
+    val run2 = Daemon.run(spark, run1.copy(rev = 1,
+      now = java.sql.Timestamp.valueOf("2026-01-16 00:00:00")))
+    val content = run2.pipeline.events
+      .filter(col("event").isin("post_created", "post_updated"))
+      .groupBy("event").agg(count(lit(1)).as("n"))
+    val q38 = SparkEntry.queries("q38_recrawl_events")(spark, "")
+    assert(content.collect().toSet === q38.select("event", "n").collect().toSet)
+    assert(content.filter(col("event") === "post_updated").count() === 1,
+      "rev 1 drifts content, so run 2 must report updates")
+  }
+
   test("ALL preflights failing crawls NOTHING: cache untouched, pure error report") {
     val dir = java.nio.file.Files.createTempDirectory("graft-daemon-allfail").toString
     // seed a cache via a healthy run first

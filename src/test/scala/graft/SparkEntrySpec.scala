@@ -21,6 +21,35 @@ class SparkEntrySpec extends SparkSuite {
     }
   }
 
+  test("the memo shares one build across queries and rebuilds after release") {
+    val sf = "/root/testdata/sf0.001"
+    def run(q: String): Long = SparkEntry.queries(q)(spark, sf).count()
+    def memoized(key: String): AnyRef =
+      SparkEntry.memo[AnyRef](spark, key)(fail(s"$key is not memoized"))
+    SparkEntry.releaseMemos(spark.sparkContext)
+
+    // q51 after q26 reuses the pair table (q51's cluster build nests the pair memo)
+    run("q26_ngram_jaccard")
+    val pairs = memoized(s"ngram-pairs:$sf")
+    run("q51_dedup_clusters")
+    assert(memoized(s"ngram-pairs:$sf") eq pairs)
+    memoized(s"ngram-clusters:$sf")
+
+    // q38 after q37 reuses the run-0 cycle (whose build nests the crawl memo)
+    run("q37_pipeline_feeds")
+    val run0 = memoized("daemon-run0")
+    run("q38_recrawl_events")
+    assert(memoized("daemon-run0") eq run0)
+
+    // the release the context's listener runs: the next call rebuilds
+    SparkEntry.releaseMemos(spark.sparkContext)
+    var rebuilt = false
+    SparkEntry.memo[AnyRef](spark, s"ngram-pairs:$sf") { rebuilt = true; pairs }
+    assert(rebuilt)
+    run("q37_pipeline_feeds")
+    assert(memoized("daemon-run0") ne run0)
+  }
+
   test("no-oracle queries fingerprint deterministically across independent evaluations") {
     // the tripwire the driver artifact records (fingerprints.json): a
     // seeded crawl / connector query must hash identically when re-run
